@@ -1,6 +1,6 @@
 package htmlspark.pipeline
 
-import org.apache.spark.sql.{DataFrame, Dataset, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Observation, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths, StandardOpenOption}
 
@@ -24,22 +24,25 @@ object IcebergishIO {
 
   /** Append `docs` as a new snapshot under `tableDir`; returns snapshot id. */
   def commit(docs: Dataset[ExtractedDoc], tableDir: String): Long = {
-    val spark = docs.sparkSession
     val prev = lastSnapshotId(tableDir)
     val snapId = prev + 1
     val dataDir = s"$tableDir/data/snap-$snapId"
-    docs.write.mode(SaveMode.Overwrite).parquet(dataDir)
-    val stats = spark.read.parquet(dataDir)
-      .agg(count(lit(1)), min("url"), max("url")).collect()(0)
+    // The manifest's row count and url range are observed on the write
+    // itself, so the commit never re-reads the snapshot it just wrote.
+    val stats = new Observation()
+    docs.observe(stats, count(lit(1)).as("n_rows"), min("url").as("min_url"),
+        max("url").as("max_url"))
+      .write.mode(SaveMode.Overwrite).parquet(dataDir)
+    val m = stats.get
     val files = new java.io.File(dataDir).listFiles()
       .filter(f => f.getName.endsWith(".parquet")).map(_.getName).sorted
     Files.createDirectories(Paths.get(s"$tableDir/snapshots"))
     val json =
       s"""{"snapshot_id": $snapId, "parent_id": ${if (prev == 0) "null" else prev},
          | "data_dir": ${q(s"data/snap-$snapId")},
-         | "n_rows": ${stats.getLong(0)},
-         | "min_url": ${q(Option(stats.getString(1)).getOrElse(""))},
-         | "max_url": ${q(Option(stats.getString(2)).getOrElse(""))},
+         | "n_rows": ${m("n_rows")},
+         | "min_url": ${q(Option(m("min_url")).fold("")(_.toString))},
+         | "max_url": ${q(Option(m("max_url")).fold("")(_.toString))},
          | "files": [${files.map(q).mkString(", ")}]}""".stripMargin
     Files.write(Paths.get(s"$tableDir/snapshots/snap-$snapId.json"),
       json.getBytes("UTF-8"),

@@ -236,7 +236,15 @@ object PagesQueries {
       ).toDF("stage", "n")
     } finally {
       try pages.unpersist(false) catch { case _: Throwable => () }
+      deleteTree(new java.io.File(tableDir))
     }
+  }
+
+  /** Best-effort recursive delete (children before their directory). */
+  private def deleteTree(f: java.io.File): Unit = {
+    val kids = f.listFiles()
+    if (kids != null) kids.foreach(deleteTree)
+    f.delete()
   }
 
   /** Per-partition lineage metrics of the salted parse (north rule). */

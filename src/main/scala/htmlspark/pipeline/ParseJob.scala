@@ -244,9 +244,10 @@ object ParseJob {
     * local[32]: on a 1000-core cluster a fixed 32 salts × 3 size buckets
     * caps the oversized-doc leg at 96 tasks no matter how many oversized
     * docs there are; deriving from the cluster keeps the skew leg's
-    * key-space ahead of its task count everywhere. Floor of 32 keeps the
-    * local bench exactly as before (local[32] → 64 ≥ 32). Routing-only:
-    * salts change which partition a row lands in, never the row set. */
+    * key-space ahead of its task count everywhere. The floor of 32 only
+    * matters below local[16]; local[32] now uses 64 salts instead of 32.
+    * That changes routing only: salts change which partition a row lands
+    * in, never the row set or the dedup survivors. */
   private def defaultSalts(pages: Dataset[Page]): Int =
     math.max(pages.sparkSession.sparkContext.defaultParallelism * 2, 32)
 

@@ -28,6 +28,8 @@ private[pipeline] object PlanCache {
   private val scalars =
     scala.collection.concurrent.TrieMap.empty[(String, String), Long]
 
+  // `f` must be idempotent: unlike getOrBuild, TrieMap.getOrElseUpdate may
+  // evaluate it twice when two threads race on the same key.
   def getOrComputeLong(spark: SparkSession, key: String)(f: => Long): Long =
     scalars.getOrElseUpdate((sessionId(spark), key), f)
 

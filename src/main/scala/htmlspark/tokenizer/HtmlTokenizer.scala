@@ -88,7 +88,7 @@ final class HtmlTokenizer(private var sink: TokenSink) {
   private var state = DATA
 
   private val pend = new CharAcc(256)          // pending character tokens
-  private val tagName = new java.lang.StringBuilder(16)
+  private val tagName = new CharAcc(16)
   private var endTag = false
   private var attrs: AttrList = new AttrList
   private val attrName = new java.lang.StringBuilder(16)
@@ -149,7 +149,7 @@ final class HtmlTokenizer(private var sink: TokenSink) {
     * keep their grown capacity; all parse state returns to initial. */
   def reset(): Unit = {
     state = DATA
-    pend.clear(); tagName.setLength(0); endTag = false
+    pend.clear(); tagName.clear(); endTag = false
     attrs = new AttrList
     attrName.setLength(0); attrValue.setLength(0)
     hasAttrValue = false; selfClosing = false; lastStartTag = ""
@@ -170,11 +170,11 @@ final class HtmlTokenizer(private var sink: TokenSink) {
     c == '\t' || c == '\n' || c == '\f' || c == ' '
 
   private def newStartTag(): Unit = {
-    tagName.setLength(0); endTag = false; attrs = new AttrList
+    tagName.clear(); endTag = false; attrs = new AttrList
     selfClosing = false
   }
   private def newEndTag(): Unit = {
-    tagName.setLength(0); endTag = true; attrs = new AttrList
+    tagName.clear(); endTag = true; attrs = new AttrList
     selfClosing = false
   }
 
@@ -190,7 +190,7 @@ final class HtmlTokenizer(private var sink: TokenSink) {
   private def emitTag(): Unit = {
     finishAttr()
     flushText()
-    val name = tagName.toString
+    val name = TagNames.canonical(tagName.a, tagName.n)
     state = DATA // sink callbacks may override (content-model switch)
     if (endTag) {
       if (attrs.size > 0) err("end-tag-with-attributes")
@@ -218,8 +218,7 @@ final class HtmlTokenizer(private var sink: TokenSink) {
   }
 
   private def appropriateEndTag: Boolean =
-    lastStartTag.nonEmpty && tagName.length == lastStartTag.length &&
-      tagName.toString == lastStartTag
+    lastStartTag.nonEmpty && TagNames.sameChars(lastStartTag, tagName.a, tagName.n)
 
   /** Case-insensitive lookahead match (consumes on success). */
   private def lookaheadIgnoreCase(word: String): Boolean = {
@@ -303,14 +302,15 @@ final class HtmlTokenizer(private var sink: TokenSink) {
       var j = pos
       while (j < len && j - runStart < Entities.MaxLen && isAsciiAlnum(buf(j)))
         j += 1
-      val run = new String(buf, runStart, j - runStart)
       var matched: String = null
       var consumed = 0
       if (j < len && buf(j) == ';') {
-        val withSemi = run + ";"
-        val v = Entities.byName.get(withSemi)
-        if (v != null) { matched = v; consumed = run.length + 1 }
+        // the name with its ';' is exactly buf[runStart, j]
+        matched = Entities.byName.get(new String(buf, runStart, j + 1 - runStart))
+        if (matched != null) consumed = j + 1 - runStart
       }
+      // only the no-semicolon lookups and the literal fallbacks need it
+      val run = if (matched == null) new String(buf, runStart, j - runStart) else null
       if (matched == null) {
         var L = math.min(run.length, Entities.MaxLenNoSemi)
         while (L >= 1 && matched == null) {
@@ -544,8 +544,8 @@ final class HtmlTokenizer(private var sink: TokenSink) {
     else if (c == '>') { pos += 1; emitTag() }
     else if (c == EOF) { err("eof-in-tag"); sink.eof(); return true }
     else if (c == '\u0000') {
-      err("unexpected-null-character"); tagName.append(REPL); pos += 1
-    } else { tagName.append(lowerIfAlpha(c)); pos += 1 }
+      err("unexpected-null-character"); tagName += REPL; pos += 1
+    } else { tagName += lowerIfAlpha(c); pos += 1 }
 
     false
   }
@@ -1251,7 +1251,7 @@ final class HtmlTokenizer(private var sink: TokenSink) {
     else if (c == '/' && appropriateEndTag) { pos += 1; state = SELF_CLOSING }
     else if (c == '>' && appropriateEndTag) { pos += 1; emitTag() }
     else if (isAsciiAlpha(c)) {
-      tagName.append(lowerIfAlpha(c)); tempBuf.append(c.toChar); pos += 1
+      tagName += lowerIfAlpha(c); tempBuf.append(c.toChar); pos += 1
     } else {
       pend += '<'; pend += '/'
       pend.appendStr(tempBuf.toString)

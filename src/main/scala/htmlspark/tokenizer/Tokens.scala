@@ -1,42 +1,49 @@
 package htmlspark.tokenizer
 
-import scala.collection.mutable.ArrayBuffer
-
 /** Attribute list of one start tag: append-only parallel arrays, duplicate
   * names dropped (first wins), names already ASCII-lowercased by the
   * tokenizer. Mirrors the role of the reference's HtmlAttributes
   * (reference: Core/HtmlAttributes.cs:39-640) with a plain Scala shape.
+  * The arrays are allocated on the first add: the tokenizer makes one
+  * list per tag, and most tags (every end tag) carry no attribute.
   */
 final class AttrList {
-  val names = new ArrayBuffer[String](5)
-  val values = new ArrayBuffer[String](5)
+  private var names: Array[String] = null
+  private var values: Array[String] = null
+  private var n = 0
 
   /** Returns false (and drops) when the name already exists. */
   def add(name: String, value: String): Boolean = {
-    var i = 0
-    while (i < names.length) {
-      if (names(i) == name) return false
-      i += 1
+    if (indexOf(name) >= 0) return false
+    if (names == null) {
+      names = new Array[String](4); values = new Array[String](4)
+    } else if (n == names.length) {
+      names = java.util.Arrays.copyOf(names, n * 2)
+      values = java.util.Arrays.copyOf(values, n * 2)
     }
-    names += name
-    values += value
+    names(n) = name; values(n) = value; n += 1
     true
   }
 
-  def get(name: String): String = {
+  private def indexOf(name: String): Int = {
     var i = 0
-    while (i < names.length) {
-      if (names(i) == name) return values(i)
+    while (i < n) {
+      if (names(i) == name) return i
       i += 1
     }
-    null
+    -1
+  }
+
+  def get(name: String): String = {
+    val i = indexOf(name)
+    if (i < 0) null else values(i)
   }
 
   def contains(name: String): Boolean = get(name) != null
-  def size: Int = names.length
+  def size: Int = n
   def nameAt(i: Int): String = names(i)
   def valueAt(i: Int): String = values(i)
-  def isEmpty: Boolean = names.isEmpty
+  def isEmpty: Boolean = n == 0
 
   /** Structural equality for the Noah's-Ark clause (same name set with same
     * values; order-insensitive, like the reference's HtmlAttributes.Equals
@@ -44,7 +51,7 @@ final class AttrList {
   def sameAs(other: AttrList): Boolean = {
     if (other.size != size) return false
     var i = 0
-    while (i < names.length) {
+    while (i < n) {
       val v = other.get(names(i))
       if (v == null || v != values(i)) return false
       i += 1
@@ -54,8 +61,11 @@ final class AttrList {
 
   def cloneAttrs(): AttrList = {
     val c = new AttrList
-    var i = 0
-    while (i < names.length) { c.names += names(i); c.values += values(i); i += 1 }
+    if (n > 0) {
+      c.names = java.util.Arrays.copyOf(names, names.length)
+      c.values = java.util.Arrays.copyOf(values, values.length)
+      c.n = n
+    }
     c
   }
 

@@ -35,6 +35,9 @@ final class DomNode(val kind: Int, val name: String, val ns: Int,
   var forceQuirks: Boolean = false
   /** template elements: separate content fragment (spec "template contents") */
   var contentFragment: DomNode = null
+  /** Set while the element is on the tree builder's stack of open
+    * elements, so membership is O(1) instead of a stack scan. */
+  var onStack: Boolean = false
 
   def childList: ArrayBuffer[DomNode] = {
     if (children == null) children = new ArrayBuffer[DomNode](4)
@@ -128,15 +131,21 @@ object DomNode {
     * survives the adversarially-deep pathological class. */
   def countElements(root: DomNode): Int = {
     var n = 0
-    var stack: List[DomNode] = root :: Nil
-    while (stack.nonEmpty) {
-      val node = stack.head; stack = stack.tail
+    var stack = new Array[DomNode](64)
+    var top = 0
+    stack(0) = root
+    while (top >= 0) {
+      val node = stack(top); top -= 1
+      val frag = if (node.kind == Dom.ELEMENT) node.contentFragment else null
+      val ch = node.children
+      val k = (if (frag != null) 1 else 0) + (if (ch != null) ch.length else 0)
+      if (top + k >= stack.length)
+        stack = java.util.Arrays.copyOf(stack, math.max(stack.length * 2, top + k + 1))
       if (node.kind == Dom.ELEMENT) n += 1
-      if (node.kind == Dom.ELEMENT && node.contentFragment != null)
-        stack = node.contentFragment :: stack
-      if (node.children != null) {
-        var i = node.children.length - 1
-        while (i >= 0) { stack = node.children(i) :: stack; i -= 1 }
+      if (frag != null) { top += 1; stack(top) = frag }
+      if (ch != null) {
+        var i = ch.length - 1
+        while (i >= 0) { top += 1; stack(top) = ch(i); i -= 1 }
       }
     }
     n

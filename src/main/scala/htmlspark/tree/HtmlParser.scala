@@ -11,7 +11,16 @@ object HtmlParser {
     def doc: DomNode = builder.doc
     def quirksMode: Int = builder.quirksMode
     def nErrors: Int = builder.nErrors
-    def errorCodes: Seq[String] = builder.errorCodes.toSeq
+    /** One array copy and no cons cells; Nil when no code was recorded. */
+    def errorCodes: Seq[String] = {
+      val b = builder.errorCodes
+      if (b.isEmpty) Nil
+      else {
+        val a = new Array[String](b.length)
+        b.copyToArray(a)
+        scala.collection.immutable.ArraySeq.unsafeWrapArray(a)
+      }
+    }
   }
 
   def parse(html: String): Result = {

@@ -85,25 +85,45 @@ final class TreeBuilder extends TokenSink {
     while (i >= 0) { if (isHtml(stack(i), name)) return true; i -= 1 }
     false
   }
-  private def stackContainsNode(n: DomNode): Boolean = {
-    var i = stack.length - 1
-    while (i >= 0) { if (stack(i) eq n) return true; i -= 1 }
-    false
+  /** Every stack mutation goes through push/pop/stackRemoveAt/stackSet/
+    * stackInsert, which keep DomNode.onStack in step with membership. */
+  private def push(e: DomNode): Unit = { stack += e; e.onStack = true }
+  private def stackRemoveAt(i: Int): DomNode = {
+    val n = stack.remove(i)
+    n.onStack = false
+    n
+  }
+  private def stackSet(i: Int, e: DomNode): Unit = {
+    stack(i).onStack = false
+    stack(i) = e; e.onStack = true
+  }
+  private def stackInsert(i: Int, e: DomNode): Unit = {
+    stack.insert(i, e); e.onStack = true
   }
 
-  private def hasInScopeGeneric(name: String,
-      barrier: (Int, String) => Boolean): Boolean = {
+  // Scope kinds for hasInScopeGeneric: an Int selector instead of a
+  // (Int, String) => Boolean argument, whose calls box `ns` per element.
+  private final val DEFAULT_SCOPE = 0; private final val BUTTON_SCOPE = 1
+  private final val LIST_SCOPE = 2; private final val TABLE_SCOPE = 3
+
+  private def hasInScopeGeneric(name: String, scope: Int): Boolean = {
     var i = stack.length - 1
     while (i >= 0) {
       val n = stack(i)
       if (isHtml(n, name)) return true
-      if (barrier(n.ns, n.name)) return false
+      val barrier = scope match {
+        case DEFAULT_SCOPE => ElemInfo.inDefaultScopeBarrier(n.ns, n.name)
+        case BUTTON_SCOPE => ElemInfo.inButtonScopeBarrier(n.ns, n.name)
+        case LIST_SCOPE => ElemInfo.inListScopeBarrier(n.ns, n.name)
+        case _ => ElemInfo.inTableScopeBarrier(n.ns, n.name)
+      }
+      if (barrier) return false
       i -= 1
     }
     false
   }
   private def hasInScope(name: String): Boolean =
-    hasInScopeGeneric(name, ElemInfo.inDefaultScopeBarrier)
+    hasInScopeGeneric(name, DEFAULT_SCOPE)
   private def hasInScopeAny(names: Set[String]): Boolean = {
     var i = stack.length - 1
     while (i >= 0) {
@@ -126,12 +146,12 @@ final class TreeBuilder extends TokenSink {
   }
   private def hasInButtonScope(name: String): Boolean = {
     if (name == "p" && openPCount <= 0) return false
-    hasInScopeGeneric(name, ElemInfo.inButtonScopeBarrier)
+    hasInScopeGeneric(name, BUTTON_SCOPE)
   }
   private def hasInListScope(name: String): Boolean =
-    hasInScopeGeneric(name, ElemInfo.inListScopeBarrier)
+    hasInScopeGeneric(name, LIST_SCOPE)
   private def hasInTableScope(name: String): Boolean =
-    hasInScopeGeneric(name, ElemInfo.inTableScopeBarrier)
+    hasInScopeGeneric(name, TABLE_SCOPE)
   private def hasInTableScopeAny(names: Set[String]): Boolean = {
     var i = stack.length - 1
     while (i >= 0) {
@@ -156,7 +176,7 @@ final class TreeBuilder extends TokenSink {
   }
 
   private def pop(): DomNode = {
-    val n = stack.remove(stack.length - 1)
+    val n = stackRemoveAt(stack.length - 1)
     if (n.ns == NS_HTML && n.name == "p") openPCount -= 1
     n
   }
@@ -170,9 +190,9 @@ final class TreeBuilder extends TokenSink {
     while (stack.nonEmpty && (pop() ne node)) ()
   }
   private def removeFromStack(node: DomNode): Unit = {
-    val i = stack.lastIndexOf(node)
+    val i = if (node.onStack) stack.lastIndexOf(node) else -1
     if (i >= 0) {
-      stack.remove(i)
+      stackRemoveAt(i)
       if (node.ns == NS_HTML && node.name == "p") openPCount -= 1
     }
   }
@@ -258,14 +278,14 @@ final class TreeBuilder extends TokenSink {
   private def insertHtmlElement(name: String, attrs: AttrList): DomNode = {
     val e = DomNode.element(name, NS_HTML, attrs)
     insertNode(e)
-    stack += e
+    push(e)
     if (name == "p") openPCount += 1
     e
   }
   private def insertForeignElement(name: String, ns: Int, attrs: AttrList): DomNode = {
     val e = DomNode.element(name, ns, attrs)
     insertNode(e)
-    stack += e
+    push(e)
     e
   }
   private def insertVoid(name: String, attrs: AttrList): Unit = {
@@ -322,8 +342,8 @@ final class TreeBuilder extends TokenSink {
     if (afe.isEmpty) return
     var i = afe.length - 1
     val last = afe(i)
-    if (last == null || stackContainsNode(last)) return
-    while (i > 0 && afe(i - 1) != null && !stackContainsNode(afe(i - 1)))
+    if (last == null || last.onStack) return
+    while (i > 0 && afe(i - 1) != null && !afe(i - 1).onStack)
       i -= 1
     while (i < afe.length) {
       val entry = afe(i)
@@ -351,7 +371,7 @@ final class TreeBuilder extends TokenSink {
         else feIdx -= 1
       }
       if (fe == null) { anyOtherEndTagInBody(subject); return }
-      val feStackIdx = stack.lastIndexOf(fe)
+      val feStackIdx = if (fe.onStack) stack.lastIndexOf(fe) else -1
       if (feStackIdx < 0) { err("adoption-agency-fe-not-open"); afe.remove(feIdx); return }
       if (!hasNodeInScope(fe)) { err("adoption-agency-fe-not-in-scope"); return }
       if (fe ne current) err("adoption-agency-fe-not-current")
@@ -388,12 +408,12 @@ final class TreeBuilder extends TokenSink {
             nodeAfeIdx = -1
           }
           if (nodeAfeIdx < 0) {
-            stack.remove(nodeStackIdx)
+            stackRemoveAt(nodeStackIdx)
             // nodeStackIdx now points at the element that was above node
           } else {
             val clone = DomNode.element(node.name, node.ns, node.attrs.cloneAttrs())
             afe(nodeAfeIdx) = clone
-            stack(nodeStackIdx) = clone
+            stackSet(nodeStackIdx, clone)
             node = clone
             if (lastNode eq furthestBlock) bookmark = nodeAfeIdx + 1
             node.appendChild(lastNode)
@@ -428,7 +448,7 @@ final class TreeBuilder extends TokenSink {
       afe.insert(math.min(bookmark, afe.length), clone)
       removeFromStack(fe)
       val fbIdx2 = stack.lastIndexOf(furthestBlock)
-      stack.insert(fbIdx2 + 1, clone)
+      stackInsert(fbIdx2 + 1, clone)
     }
   }
 
@@ -497,7 +517,7 @@ final class TreeBuilder extends TokenSink {
     fragmentContext = DomNode.element(contextName, ns, new AttrList)
     val root = DomNode.element("html", NS_HTML, new AttrList)
     doc.appendChild(root)
-    stack += root
+    push(root)
     if (ns == NS_HTML) contextName match {
       case "title" | "textarea" => tokenizer.setRcdata()
       // noscript is RAWTEXT only when scripting is enabled (reference:
@@ -613,7 +633,7 @@ final class TreeBuilder extends TokenSink {
           quirksMode = QUIRKS; mode = BEFORE_HTML; again = true
         case BEFORE_HTML =>
           val root = DomNode.element("html", NS_HTML, new AttrList)
-          doc.appendChild(root); stack += root
+          doc.appendChild(root); push(root)
           mode = BEFORE_HEAD; again = true
         case BEFORE_HEAD =>
           headElem = insertHtmlElement("head", new AttrList)
@@ -668,22 +688,21 @@ final class TreeBuilder extends TokenSink {
     // spec-equivalent for these modes, ~3× fewer calls on prose documents.
     if (mode == TEXT_MODE) {
       var k = s
-      var hasNul = false
-      while (k < end && !hasNul) { if (buf(k) == '\u0000') hasNul = true; k += 1 }
-      if (!hasNul) { insertCharsAt(buf, s, end); return }
+      while (k < end && buf(k) != '\u0000') k += 1
+      if (k == end) { insertCharsAt(buf, s, end); return }
     } else if ((mode == IN_BODY || mode == IN_CAPTION || mode == IN_CELL) &&
                useHtmlRules(isStartTag = false, null, isText = true, isEof = false)) {
+      // Whitespace matters here only for clearing framesetOk: skip the
+      // classification once it is false, and stop it at the first
+      // non-whitespace char. The NUL scan covers the whole run.
       var k = s
-      var hasNul = false
-      var hasNonWs = false
-      while (k < end && !hasNul) {
-        val c = buf(k)
-        if (c == '\u0000') hasNul = true
-        else if (!(c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r'))
-          hasNonWs = true
-        k += 1
+      if (framesetOk) {
+        while (k < end && { val c = buf(k)
+          c == ' ' || c == '\t' || c == '\n' || c == '\f' || c == '\r' }) k += 1
       }
-      if (!hasNul) {
+      val hasNonWs = framesetOk && k < end && buf(k) != '\u0000'
+      while (k < end && buf(k) != '\u0000') k += 1
+      if (k == end) {
         reconstructAfe()
         insertCharsAt(buf, s, end)
         if (hasNonWs) framesetOk = false
@@ -733,7 +752,7 @@ final class TreeBuilder extends TokenSink {
       case BEFORE_HTML =>
         if (ws) () else {
           val root = DomNode.element("html", NS_HTML, new AttrList)
-          doc.appendChild(root); stack += root
+          doc.appendChild(root); push(root)
           mode = BEFORE_HEAD; handleCharSegment(buf, start, end, ws)
         }
       case BEFORE_HEAD =>
@@ -860,11 +879,11 @@ final class TreeBuilder extends TokenSink {
       case BEFORE_HTML =>
         if (name == "html") {
           val root = DomNode.element("html", NS_HTML, attrs)
-          doc.appendChild(root); stack += root
+          doc.appendChild(root); push(root)
           mode = BEFORE_HEAD
         } else {
           val root = DomNode.element("html", NS_HTML, new AttrList)
-          doc.appendChild(root); stack += root
+          doc.appendChild(root); push(root)
           mode = BEFORE_HEAD; startTagHtml(name, attrs, selfClosing)
         }
       case BEFORE_HEAD => name match {
@@ -903,7 +922,7 @@ final class TreeBuilder extends TokenSink {
         case "base" | "basefont" | "bgsound" | "link" | "meta" | "noframes" |
              "script" | "style" | "template" | "title" =>
           err("element-after-head")
-          stack += headElem
+          push(headElem)
           inHeadDelegate(name, attrs, selfClosing)
           removeFromStack(headElem)
         case "head" => err("nested-head")
@@ -1491,7 +1510,7 @@ final class TreeBuilder extends TokenSink {
       case BEFORE_HTML =>
         if (name == "head" || name == "body" || name == "html" || name == "br") {
           val root = DomNode.element("html", NS_HTML, new AttrList)
-          doc.appendChild(root); stack += root
+          doc.appendChild(root); push(root)
           mode = BEFORE_HEAD; endTagHtml(name)
         } else err("end-tag-before-html")
       case BEFORE_HEAD =>
