@@ -4,13 +4,12 @@ import htmlspark.tree.HtmlParser
 
 /** Plain-thread engine harness: isolates engine-level scaling from Spark
   * overheads. One reusable parser Engine per thread, mirroring the
-  * per-partition reuse in ParseJob.parseAll. */
+  * per-partition reuse in ParseJob.parseAll.
+  * Usage: runMain graft.ThreadProf <threads> [docsPerThread]  */
 object ThreadProf {
   def main(args: Array[String]): Unit = {
     val nt = args(0).toInt
-    // optional second arg "fresh" builds a new engine per doc (A/B control)
-    val fresh = args.length > 1 && args(1) == "fresh"
-    val perThread = if (args.length > 2) args(2).toLong else 60000L
+    val perThread = if (args.length > 1) args(1).toLong else 60000L
     // warmup (JIT) with a reused engine, same as the measured loop
     val warm = new HtmlParser.Engine
     (0L until 5000L).foreach(i => ParseJob.parsePage(PagesGen.page(i), warm))
@@ -21,8 +20,7 @@ object ThreadProf {
         var i = k * perThread
         val end = i + perThread
         while (i < end) {
-          ParseJob.parsePage(PagesGen.page(i),
-            if (fresh) new HtmlParser.Engine else engine)
+          ParseJob.parsePage(PagesGen.page(i), engine)
           i += 1
         }
       })

@@ -293,36 +293,16 @@ object AnnOps {
       .select(col("query_id"), col("neighbor_id"), col("rank"))
   }
 
-  /** SLIM LSH index: (vec_id, label, table_id, bucket) WITHOUT the vector
-    * payload. The fat index (lshBuckets) carries each embedding in all
-    * nTables of its rows — ×nTables the vector corpus in the written-once
-    * index table (VERDICT r4 "What's wrong #1") — buying join-free
-    * scoring; the slim index stores ×nTables only the ~24-byte key rows
-    * and re-fetches vectors by vec_id at scoring time. See PLANS.md §q19
-    * for the measured A/B and the at-scale arithmetic. */
-  def lshBucketsSlim(spark: SparkSession, dir: String,
-                     nPlanes: Int = DefaultPlanes,
-                     nTables: Int = DefaultTables): DataFrame =
-    PlanCache.getOrBuild(spark, s"annbucketsslim:$dir:$nPlanes:$nTables")(
-      bucketsOf(table(spark, dir, "embeddings"), nPlanes, nTables)
-        .select("vec_id", "table_id", "bucket"))
-
   /** LSH-accelerated ANN: probe the query's bucket in each table, union +
     * dedup candidates, then exact cosine + top-k. The candidate join key is
     * the compact (table_id, bucket) id — the 100 TB shape (the corpus side
     * never shuffles; dup candidates collapse before the ranking window).
-    *
-    * `slimIndex = true` scores through the slim index instead: candidate
-    * (query_id, vec_id) pairs dedup BEFORE the vector fetch, then one join
-    * against the base embeddings table recovers the vectors (co-located
-    * when the table is bucketed by vec_id — IcebergishIO's layout). Same
-    * results by construction; the A/B trades index footprint against the
-    * fetch join (PLANS.md §q19). */
+    * The index embeds each vector in all nTables of its rows (join-free
+    * scoring); the key-only slim index lost its A/B (PLANS.md §q19). */
   def annLsh(spark: SparkSession, dir: String,
              nQueries: Int = DefaultQueries, k: Int = DefaultK,
              nPlanes: Int = DefaultPlanes, nTables: Int = DefaultTables,
-             multiProbe: Boolean = false,
-             slimIndex: Boolean = false): DataFrame = {
+             multiProbe: Boolean = false): DataFrame = {
     val bucketed = lshBuckets(spark, dir, nPlanes, nTables)
     // query side: filter BEFORE the bucket kernel so the scan prunes to
     // nQueries rows instead of re-kerneling the whole corpus
@@ -345,48 +325,18 @@ object AnnOps {
     val queries = qProbed
       .select(col("vec_id").as("query_id"), col("embedding").as("q"),
         col("table_id").as("qtable"), col("bucket").as("qbucket"))
-    val cands =
-      if (slimIndex) {
-        // key-only candidate generation: dedup (query, neighbor) BEFORE
-        // the vector fetch so each pair fetches and scores exactly once
-        val pairs = lshBucketsSlim(spark, dir, nPlanes, nTables)
-          .join(broadcast(queries.select(col("query_id"),
-              col("qtable"), col("qbucket")).distinct()),
-            col("table_id") === col("qtable") &&
-              col("bucket") === col("qbucket") &&
-              col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"))
-          .distinct()
-        val qVecs = table(spark, dir, "embeddings")
-          .filter(col("vec_id") < nQueries)
-          .select(col("vec_id").as("query_id"), col("embedding").as("q"))
-        pairs
-          .join(broadcast(qVecs), Seq("query_id"))
-          .join(table(spark, dir, "embeddings")
-              .select(col("vec_id").as("neighbor_id"),
-                col("embedding").as("ne")),
-            Seq("neighbor_id"))
-          .select(col("query_id"), col("neighbor_id"),
-            cosine(spark)(col("q"), col("ne")).as("cos"))
-          .filter(!isnan(col("cos")))
-      } else {
-        // braces bind the whole fat-path chain to this branch explicitly
-        // (ADVICE r5: the slim path above pre-dedups and must BYPASS the
-        // groupBy collapse below — previously only line-continuation
-        // parsing enforced that)
-        bucketed.join(broadcast(queries),
-            col("table_id") === col("qtable") &&
-              col("bucket") === col("qbucket") &&
-              col("vec_id") =!= col("query_id"))
-          .select(col("query_id"), col("vec_id").as("neighbor_id"),
-            cosine(spark)(col("q"), col("embedding")).as("cos"))
-          // NaN-score parity with oracle (ADVICE r3)
-          .filter(!isnan(col("cos")))
-          // a pair found in several tables scores identically — collapse
-          // before ranking so duplicates can't occupy multiple top-k slots
-          .groupBy("query_id", "neighbor_id")
-          .agg(max(col("cos")).as("cos"))
-      }
+    val cands = bucketed.join(broadcast(queries),
+        col("table_id") === col("qtable") &&
+          col("bucket") === col("qbucket") &&
+          col("vec_id") =!= col("query_id"))
+      .select(col("query_id"), col("vec_id").as("neighbor_id"),
+        cosine(spark)(col("q"), col("embedding")).as("cos"))
+      // NaN-score parity with oracle (ADVICE r3)
+      .filter(!isnan(col("cos")))
+      // a pair found in several tables scores identically — collapse
+      // before ranking so duplicates can't occupy multiple top-k slots
+      .groupBy("query_id", "neighbor_id")
+      .agg(max(col("cos")).as("cos"))
     val w = Window.partitionBy("query_id")
       .orderBy(col("cos").desc, col("neighbor_id").asc)
     cands.withColumn("rank", row_number().over(w))

@@ -11,29 +11,46 @@ import org.apache.spark.sql.functions._
 object PagesQueries {
 
   /** Scale the corpus with the sf dir via the events row count. Memoized
-    * per (session, dir) — every sampled p-face calls this (often twice:
-    * once for the sample size, once inside parsedSample), and each call
-    * was a full count job (r6; ~10 redundant jobs per bench run). */
-  def nPages(spark: SparkSession, dir: String): Long =
-    PlanCache.getOrComputeLong(spark, s"npages:$dir") {
-      spark.read.parquet(s"$dir/events.parquet").count()
+    * per (session, events file list) — every sampled p-face calls this
+    * (often twice: once for the sample size, once inside parsedSample),
+    * and each call was a full count job (r6; ~10 redundant jobs per bench
+    * run). The key carries each file's path, size and mtime, so events
+    * rewritten inside a session are counted again. */
+  def nPages(spark: SparkSession, dir: String): Long = {
+    val events = new org.apache.hadoop.fs.Path(s"$dir/events.parquet")
+    val files = events.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listFiles(events, true)
+    val parts = Seq.newBuilder[String]
+    while (files.hasNext) {
+      val f = files.next()
+      parts += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
     }
+    val fingerprint = java.util.UUID.nameUUIDFromBytes(
+      parts.result().sorted.mkString("\n").getBytes("UTF-8"))
+    PlanCache.getOrComputeLong(spark, s"npages:$dir:$fingerprint") {
+      spark.read.parquet(events.toString).count()
+    }
+  }
 
   /** Corpus size used by the sampled p-queries: shared so the Spark side
     * and the Verify-written oracle parquet agree on the row set. */
   def sampleN(spark: SparkSession, dir: String, cap: Long = 5000): Long =
     math.max(500L, math.min(nPages(spark, dir) / 10, cap))
 
-  /** One parsed sample corpus per (session, dir, cap), persisted and shared
-    * by every p-face (p01/p02/p04/p08–p11): without this each face re-runs
-    * the full dedup→salt→parse pipeline — the same N× redundancy the LSH
-    * plan cache removes for the sketch subplans. p05 (the throughput
-    * workhorse) deliberately stays un-cached and full-corpus. */
+  /** One parsed sample corpus per (session, sample size), persisted and
+    * shared by every p-face (p01/p02/p04/p08–p11): without this each face
+    * re-runs the full dedup→salt→parse pipeline — the same N× redundancy
+    * the LSH plan cache removes for the sketch subplans. Keyed on the size
+    * alone because PagesGen.pages(spark, n) is fully determined by n. p05
+    * (the throughput workhorse) deliberately stays un-cached and
+    * full-corpus. */
   private def parsedSample(spark: SparkSession, dir: String,
-                           cap: Long = 5000): DataFrame =
-    PlanCache.getOrBuild(spark, s"parsed:$dir:$cap") {
-      ParseJob.run(PagesGen.pages(spark, sampleN(spark, dir, cap))).toDF
+                           cap: Long = 5000): DataFrame = {
+    val n = sampleN(spark, dir, cap)
+    PlanCache.getOrBuild(spark, s"parsed:$n") {
+      ParseJob.run(PagesGen.pages(spark, n)).toDF
     }
+  }
 
   /** Flagship: full extraction pipeline (dedup → salt → parse). No embedded
     * global sort — determinism ordering is applied by the Verify wrapper;
@@ -264,13 +281,13 @@ object PagesQueries {
 
   /** Throughput workhorse for Bench: full-scale corpus parse, one count.
     * Same dedup-latest semantics and survivor stats as ParseJob.run, but
-    * through the narrow-shuffle stats variant (r6): the only columns this
-    * face aggregates are (n_bytes, parse_ok), so the dedup exchange ships
-    * ~40 B/row instead of full extracted rows — identical output values,
-    * ~10× fewer shuffled bytes. */
+    * through its narrow projection ParseJob.runStats: the only columns
+    * this face aggregates are (n_bytes, parse_ok), so the dedup exchange
+    * ships ~40 B/row instead of full extracted rows — identical output
+    * values, ~10× fewer shuffled bytes. */
   def throughput(spark: SparkSession, dir: String): DataFrame = {
     val n = nPages(spark, dir)
-    ParseJob.runParseFirstStats(PagesGen.pages(spark, n))
+    ParseJob.runStats(PagesGen.pages(spark, n))
       .agg(count(lit(1)).as("n_docs"),
         sum(col("n_bytes").cast("long")).as("sum_bytes"),
         sum(when(col("parse_ok"), 1L).otherwise(0L)).as("n_ok"))

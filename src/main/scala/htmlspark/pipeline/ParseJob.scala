@@ -52,8 +52,8 @@ final case class PartitionMetrics(
     min_url: String,
     max_url: String)
 
-/** The extraction pipeline: pages → (dedup latest) → skew-salted
-  * repartition → per-row parse via typed Dataset map → extracted docs (+
+/** The extraction pipeline: pages → skew-salted repartition → per-row
+  * parse via typed Dataset map → latest crawl per url → extracted docs (+
   * per-partition metrics). The parse is a pure Array[Byte] ⇒ ExtractedDoc
   * function; everything around it stays declarative so Catalyst owns scan
   * pruning and the dedup window plan.
@@ -61,41 +61,20 @@ final case class PartitionMetrics(
 object ParseJob {
 
   /** Pure per-row parse: sniff → decode → tokenize+tree-build → extract.
-    * Bounded single restart when a meta-declared charset contradicts the
-    * default (reference suspends mid-parse instead:
-    * Core/Tokenizer.cs:2056-2059). Total: any byte soup yields a row. */
+    * Total: any byte soup yields a row. */
   def parsePage(p: Page): ExtractedDoc = parsePage(p, new HtmlParser.Engine)
 
   def parsePage(p: Page, engine: HtmlParser.Engine): ExtractedDoc = {
     val bytes = if (p.html == null) Array.emptyByteArray else p.html
     val t0 = System.nanoTime()
     try {
-      var sniff = EncodingSniffer.sniff(bytes)
-      var html = EncodingSniffer.decode(bytes, sniff)
-      var result = engine.parse(html)
-      var restarted = false
-      var lateMeta = false
-      if (sniff.source == EncodingSniffer.SourceDefault) {
-        val declared = findMetaCharset(result.doc)
-        // Meta-boundary metric (reference NotifyAboutMetaBoundary,
-        // Core/Tokenizer.cs:675-678,419-421): a charset-bearing meta the
-        // prescan did not see — i.e. it sits beyond the sniff window — is
-        // flagged even when it agrees with the default and needs no
-        // restart. (Deviation, FIXTURES.md §3: our boundary is the spec's
-        // 1024-byte prescan window, not the reference's 512 bytes.)
-        lateMeta = declared != null
-        if (declared != null && declared != sniff.charset) {
-          sniff = EncodingSniffer.Sniff(declared, "meta-in-parse", 0)
-          html = EncodingSniffer.decode(bytes, sniff)
-          result = engine.parse(html)
-          restarted = true
-        }
-      }
+      val d = decodeAndParse(bytes, engine)
+      val result = d.result
       val text = TextExtractor.extract(result.doc)
       ExtractedDoc(
         url = p.url, warc_ts = p.warc_ts, lang = p.lang,
         text_extracted = text,
-        charset = sniff.charset, charset_source = sniff.source,
+        charset = d.sniff.charset, charset_source = d.sniff.source,
         n_bytes = bytes.length, n_chars = text.length,
         n_nodes = htmlspark.tree.DomNode.countElements(result.doc),
         n_parse_errors = result.nErrors,
@@ -103,7 +82,7 @@ object ParseJob {
         quirks_mode = result.quirksMode match {
           case 0 => "no-quirks"; case 1 => "limited-quirks"; case _ => "quirks"
         },
-        restarted = restarted, late_meta = lateMeta, parse_ok = true,
+        restarted = d.restarted, late_meta = d.lateMeta, parse_ok = true,
         error = null,
         parse_us = (System.nanoTime() - t0) / 1000)
     } catch {
@@ -115,22 +94,43 @@ object ParseJob {
     }
   }
 
-  /** Sniff → decode → parse with the same bounded restart parsePage
-    * applies, returning the final DOM (the serialization face p17 needs
-    * the tree, not the extracted row). Not used on the extraction hot
-    * path — parsePage keeps its fused form. */
+  /** The final DOM of a page, through the same sniff → decode → parse →
+    * restart rule as parsePage (the serialization face p17 needs the
+    * tree, not the extracted row). */
   def parseDomOnly(bytes0: Array[Byte],
-                   engine: HtmlParser.Engine): htmlspark.tree.DomNode = {
-    val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
-    var sniff = EncodingSniffer.sniff(bytes)
-    var result = engine.parse(EncodingSniffer.decode(bytes, sniff))
-    if (sniff.source == EncodingSniffer.SourceDefault) {
-      val declared = findMetaCharset(result.doc)
-      if (declared != null && declared != sniff.charset)
-        result = engine.parse(EncodingSniffer.decode(bytes,
-          EncodingSniffer.Sniff(declared, "meta-in-parse", 0)))
+                   engine: HtmlParser.Engine): htmlspark.tree.DomNode =
+    decodeAndParse(if (bytes0 == null) Array.emptyByteArray else bytes0,
+      engine).result.doc
+
+  /** A parsed page with the charset that decoded it and its meta flags. */
+  private final class Decoded(val sniff: EncodingSniffer.Sniff,
+                              val result: HtmlParser.Result,
+                              val restarted: Boolean, val lateMeta: Boolean)
+
+  /** Sniff → decode → parse, with a bounded single restart when a
+    * meta-declared charset contradicts the default (reference suspends
+    * mid-parse instead: Core/Tokenizer.cs:2056-2059).
+    *
+    * Meta-boundary metric (reference NotifyAboutMetaBoundary,
+    * Core/Tokenizer.cs:675-678,419-421): a charset-bearing meta the
+    * prescan did not see — i.e. it sits beyond the sniff window — is
+    * flagged even when it agrees with the default and needs no restart.
+    * (Deviation, FIXTURES.md §3: our boundary is the spec's 1024-byte
+    * prescan window, not the reference's 512 bytes.) */
+  private def decodeAndParse(bytes: Array[Byte],
+                             engine: HtmlParser.Engine): Decoded = {
+    val sniff = EncodingSniffer.sniff(bytes)
+    val result = engine.parse(EncodingSniffer.decode(bytes, sniff))
+    val declared =
+      if (sniff.source == EncodingSniffer.SourceDefault) findMetaCharset(result.doc)
+      else null
+    if (declared == null || declared == sniff.charset)
+      new Decoded(sniff, result, restarted = false, lateMeta = declared != null)
+    else {
+      val meta = EncodingSniffer.Sniff(declared, "meta-in-parse", 0)
+      new Decoded(meta, engine.parse(EncodingSniffer.decode(bytes, meta)),
+        restarted = true, lateMeta = true)
     }
-    result.doc
   }
 
   /** Element budget for the in-parse meta-charset walk: a contradicting
@@ -178,7 +178,8 @@ object ParseJob {
     found
   }
 
-  /** Dedup to the latest crawl per url (north-rule dedup).
+  /** Dedup to the latest crawl per url (north-rule dedup) on raw pages,
+    * for consumers that need the surviving html itself (p03, p17, resume).
     *
     * Shuffle-frugal shape: re-crawled urls are rare (~1%), so never shuffle
     * the 99% singleton payloads. Pass 1 finds duplicated urls with a
@@ -186,8 +187,9 @@ object ParseJob {
     * not the html blob). The dup-url set is then broadcast: singletons
     * stream through with NO shuffle, and only the duplicated rows pay the
     * per-url ranking window. At 10^12 rows the broadcast side is the dup
-    * URL set, not the corpus — if it outgrows broadcast, swap the two
-    * joins for bucketed ones; the payload-shuffle asymmetry still holds. */
+    * URL set, not the corpus — if it outgrows broadcast, drop the two
+    * `broadcast` hints (with a bucketed-by-url table both joins
+    * co-locate); the payload-shuffle asymmetry still holds. */
   def dedupLatest(pages: Dataset[Page]): Dataset[Page] = {
     import pages.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
@@ -208,65 +210,34 @@ object ParseJob {
     singletons.union(dedupedDups)
   }
 
-  /** Fallback for when the dup-url set outgrows broadcast (possible at
-    * 10^12 rows with a hostile crawl): same two-join shape with shuffle
-    * joins. The anti/semi joins shuffle (url, payload) once; with a
-    * bucketed-by-url table layout (IcebergishIO writes bucketed in prod)
-    * both joins co-locate and the shuffle disappears entirely. */
-  def dedupLatestNoBroadcast(pages: Dataset[Page]): Dataset[Page] = {
-    import pages.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val dupUrls = pages.groupBy($"url")
-      .agg(count(lit(1)).as("n"))
-      .filter($"n" > 1)
-      .select($"url")
-    val singletons = pages.join(dupUrls, Seq("url"), "left_anti").as[Page]
-    val w = Window.partitionBy($"url")
-      .orderBy($"warc_ts".desc, xxhash64($"html").desc)
-    val dedupedDups = pages.join(dupUrls, Seq("url"), "left_semi")
-      .withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1).drop("rn").as[Page]
-    singletons.union(dedupedDups)
-  }
+  /** Pages above this many bytes take the salted exchange. */
+  private val SaltThreshold = 65536
 
-  /** The original full-shuffle variant, kept for A/B in benchmarks. */
-  def dedupLatestWindowAll(pages: Dataset[Page]): Dataset[Page] = {
-    import pages.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy($"url")
-      .orderBy($"warc_ts".desc, xxhash64($"html").desc)
-    pages.withColumn("rn", row_number().over(w))
-      .filter($"rn" === 1).drop("rn").as[Page]
-  }
-
-  /** Salt-count default: scale-adaptive (r6, guide §2.5) — 2× the
-    * session's default parallelism instead of a constant tuned for
-    * local[32]: on a 1000-core cluster a fixed 32 salts × 3 size buckets
-    * caps the oversized-doc leg at 96 tasks no matter how many oversized
-    * docs there are; deriving from the cluster keeps the skew leg's
-    * key-space ahead of its task count everywhere. The floor of 32 only
-    * matters below local[16]; local[32] now uses 64 salts instead of 32.
-    * That changes routing only: salts change which partition a row lands
-    * in, never the row set or the dedup survivors. */
-  private def defaultSalts(pages: Dataset[Page]): Int =
+  /** Salt count: scale-adaptive (r6, guide §2.5) — 2× the session's
+    * default parallelism instead of a constant tuned for local[32]: on a
+    * 1000-core cluster a fixed 32 salts × 3 size buckets caps the
+    * oversized-doc leg at 96 tasks no matter how many oversized docs there
+    * are; deriving from the cluster keeps the skew leg's key-space ahead
+    * of its task count everywhere. The floor of 32 only matters below
+    * local[16]. Salts change which partition a row lands in, never the
+    * row set or the dedup survivors. */
+  private def saltCount(pages: Dataset[Page]): Int =
     math.max(pages.sparkSession.sparkContext.defaultParallelism * 2, 32)
 
   /** Skew-salted repartition: CPU cost tracks byte size and nesting, which
     * AQE cannot see (it balances shuffle bytes, and a 2 MB doc costs ~1000×
     * a 2 KB doc in the SAME byte-balanced partition). Route rows by
     * (size_bucket, salt) so pathological docs spread across tasks.
-    * `salts <= 0` → scale-adaptive default (defaultSalts).
     */
-  def saltBySize(pages: Dataset[Page], salts0: Int = -1,
-                 threshold: Int = 65536): Dataset[Page] = {
+  def saltBySize(pages: Dataset[Page]): Dataset[Page] = {
     import pages.sparkSession.implicits._
-    val salts = if (salts0 > 0) salts0 else defaultSalts(pages)
+    val salts = saltCount(pages)
     // Only the skew classes pay the shuffle: ordinary docs (≤ threshold
     // bytes) stay where the scan put them; big/deep docs are hash-spread by
     // (size_bucket, salt). Parsing is order-independent, so the two legs
     // re-unite with a cheap union after the narrow split.
-    val small = pages.filter(octet_length($"html") <= threshold)
-    val big = pages.filter(octet_length($"html") > threshold)
+    val small = pages.filter(octet_length($"html") <= SaltThreshold)
+    val big = pages.filter(octet_length($"html") > SaltThreshold)
       .withColumn("size_bucket",
         when(octet_length($"html") > 1000000, 3)
           .when(octet_length($"html") > 262144, 2)
@@ -291,113 +262,67 @@ object ParseJob {
     }
   }
 
-  /** Single-lineage variant of the salt: every row rides ONE hash
-    * repartition keyed by (size_bucket, salt). More shuffled bytes than
-    * saltBySize, but the source is evaluated exactly once.
-    * `salts <= 0` → scale-adaptive default (defaultSalts). */
-  def saltAll(pages: Dataset[Page], salts0: Int = -1): Dataset[Page] = {
-    import pages.sparkSession.implicits._
-    val salts = if (salts0 > 0) salts0 else defaultSalts(pages)
-    pages
-      .withColumn("size_bucket",
-        when(octet_length($"html") > 1000000, 3)
-          .when(octet_length($"html") > 262144, 2)
-          .when(octet_length($"html") > 65536, 1)
-          .otherwise(0))
-      .withColumn("salt", pmod(xxhash64($"url"), lit(salts)))
-      .repartition(col("size_bucket"), col("salt"))
-      .drop("size_bucket", "salt")
-      .as[Page]
-  }
-
-  /** Full pipeline: dedup → salt → parse.
-    *
-    * Two physical strategies for the same logical plan:
-    *  - `rescan = true`: shuffle-frugal (dedupLatest + saltBySize) — the
-    *    source is scanned up to 5×, but only ~1% of payload bytes ever
-    *    shuffle. Right when the source is a columnar table on a cluster:
-    *    scans are parallel and cheap, cross-node shuffle is the scarce
-    *    resource (the 100 TB default).
-    *  - `rescan = false`: single-lineage (window-all dedup + saltAll) — the
-    *    source is read exactly once and all rows shuffle twice. Right when
-    *    re-evaluating the source is expensive relative to shuffle (local
-    *    bench: tmpfs shuffle is parallel memcpy).
-    */
-  def run(pages: Dataset[Page], strategy: String = "parse-first"): Dataset[ExtractedDoc] =
-    strategy match {
-      case "rescan" => parseAll(saltBySize(dedupLatest(pages)))
-      case "shuffle" => parseAll(saltAll(dedupLatestWindowAll(pages)))
-      case _ => runParseFirst(pages)
-    }
-
   /** The (url, warc_ts) tiebreak value, as a row-local kernel: exactly
     * Spark's xxhash64(html) (seed 42 over the raw bytes — the catalyst
     * XXH64 the expression compiles to; XxHashTieSpec pins the equality),
-    * computed INSIDE the parse map so the parse-first strategies need no
-    * separate projection + tuple-encoder stage around the parse (r6: one
-    * less per-row serialize/deserialize round-trip at any scale). Null
-    * html returns the seed (42) — exactly what the expression does with a
-    * null child — matching StreamingParse.htmlTie, which now delegates
-    * here (one source of truth for the survivor tiebreak). */
+    * computed INSIDE the parse map so the pipeline needs no separate
+    * projection + tuple-encoder stage around the parse. Null html returns
+    * the seed (42) — exactly what the expression does with a null child.
+    * dedupLatest and StreamingParse.dedupLatestStream order by the same
+    * value (one source of truth for the survivor tiebreak). */
   private[htmlspark] def tieOf(html: Array[Byte]): Long =
     if (html == null) 42L
     else org.apache.spark.sql.catalyst.expressions.XXH64.hashUnsafeBytes(
       html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       html.length, 42L)
 
-  /** Default strategy: parse BEFORE the dedup shuffle.
-    *
-    * The html payload (~2.5 KB/doc) never shuffles for ordinary docs: the
-    * scan→parse stages fuse into one narrow pipeline (selective salting
-    * still spreads oversized docs first), and latest-crawl dedup runs on
-    * the *extracted* rows (~0.5 KB) — a 5-6× smaller shuffle. Parsing the
-    * ~1% stale duplicate crawls costs ~1% extra CPU, far cheaper than
-    * shuffling 100% of raw bytes. Output is identical: the parse is pure,
-    * so picking the latest row before or after parsing commutes. */
-  def runParseFirst(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
+  /** salt → parse, each row carrying its tiebreak: (doc, tie). */
+  private def parsedWithTie(pages: Dataset[Page]): DataFrame = {
     import pages.sparkSession.implicits._
-    import org.apache.spark.sql.expressions.Window
-    // Tiebreak on xxhash64(html) — the SAME value the dedup-first
-    // strategies order by — computed in the parse kernel (tieOf) and
-    // carried through it, so all strategies pick the same survivor under
-    // (url, warc_ts) ties (hashing text_extracted here would also leave
-    // markup-only differences unresolved: identical text,
-    // nondeterministic survivor).
-    val parsed = saltBySize(pages).mapPartitions { it =>
+    saltBySize(pages).mapPartitions { it =>
       val engine = new HtmlParser.Engine
       it.map(p => (parsePage(p, engine), tieOf(p.html)))
     }.toDF("doc", "tie")
+  }
+
+  /** Full pipeline: salt → parse → latest crawl per url.
+    *
+    * The parse runs BEFORE the dedup shuffle. The html payload (~2.5
+    * KB/doc) never shuffles for ordinary docs: the scan→parse stages fuse
+    * into one narrow pipeline (selective salting still spreads oversized
+    * docs first), and latest-crawl dedup runs on the *extracted* rows
+    * (~0.5 KB) — a 5-6× smaller shuffle. Parsing the ~1% stale duplicate
+    * crawls costs ~1% extra CPU, far cheaper than shuffling 100% of raw
+    * bytes. Output is identical to dedup-then-parse: the parse is pure, so
+    * picking the latest row before or after parsing commutes. The dedup
+    * is a rank-1 window, not max_by over the full row: max_by's struct
+    * buffer triples the exchange here (PLANS.md, removed strategies). */
+  def run(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
+    import pages.sparkSession.implicits._
+    import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy($"doc.url")
       .orderBy($"doc.warc_ts".desc, $"tie".desc)
-    parsed.withColumn("rn", row_number().over(w))
+    parsedWithTie(pages).withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
       .select($"doc.*").as[ExtractedDoc]
   }
 
-  /** Narrow-shuffle survivor-stats variant of runParseFirst (r6, guide
-    * §2.3/§8): when the consumer only needs per-survivor (n_bytes,
-    * parse_ok) — the throughput face — the dedup decision needs just
-    * (url, warc_ts, tie) and the payload just those two stats, so the
-    * post-parse exchange carries ~40 B/row instead of the full extracted
-    * row (~0.5 KB, text included): a 10×+ smaller shuffle at any scale.
-    * The survivor per url is the (warc_ts, tie)-lexicographic-max row —
-    * exactly the row runParseFirst's rank-1 window picks (row_number over
-    * (warc_ts desc, tie desc)) — so the stats are identical; expressing it
-    * as max_by additionally enables map-side partial aggregation (plan:
-    * partial SortAggregate before the exchange — a sort remains because
-    * the struct agg buffer is sort-based, but it runs pre-shuffle and the
-    * exchange carries one candidate per (map partition, url)). */
-  def runParseFirstStats(pages: Dataset[Page]): DataFrame = {
+  /** Per-survivor (n_bytes, parse_ok) of `run` — the throughput face.
+    * The dedup decision needs just (url, warc_ts, tie) and the payload
+    * just those two stats, so the select before the aggregate lets
+    * serializer pruning drop every other doc field: the post-parse
+    * exchange carries ~40 B/row instead of the full extracted row. The
+    * survivor per url is the (warc_ts, tie)-lexicographic-max row —
+    * exactly the row run's rank-1 window picks — so the stats are
+    * identical; max_by additionally enables map-side partial aggregation
+    * (a partial SortAggregate before the exchange: one candidate per (map
+    * partition, url)). */
+  def runStats(pages: Dataset[Page]): DataFrame = {
     import pages.sparkSession.implicits._
-    val parsed = saltBySize(pages).mapPartitions { it =>
-      val engine = new HtmlParser.Engine
-      it.map { p =>
-        val tie = tieOf(p.html)
-        val d = parsePage(p, engine)
-        (d.url, d.warc_ts, tie, d.n_bytes, d.parse_ok)
-      }
-    }.toDF("url", "warc_ts", "tie", "n_bytes", "parse_ok")
-    parsed.groupBy("url")
+    parsedWithTie(pages)
+      .select($"doc.url".as("url"), $"doc.warc_ts".as("warc_ts"), $"tie",
+        $"doc.n_bytes".as("n_bytes"), $"doc.parse_ok".as("parse_ok"))
+      .groupBy("url")
       .agg(max_by(struct($"n_bytes", $"parse_ok"),
         struct($"warc_ts", $"tie")).as("s"))
       .select($"url", $"s.n_bytes".as("n_bytes"),

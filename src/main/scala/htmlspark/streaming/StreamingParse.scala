@@ -39,19 +39,11 @@ object StreamingParse {
     * the current winner plus the max event time seen (drives the timeout). */
   final case class PendingLatest(page: Page, tie: Long, maxTsMs: Long)
 
-  /** Mirror of Spark's `xxhash64(html)` (seed 42, null → seed) so the
-    * streaming tiebreak picks the SAME survivor as the batch dedup
-    * strategies under (url, warc_ts) ties. Delegates to ParseJob.tieOf
-    * (r6) — the batch parse-first strategies now compute the same kernel
-    * in-map, so there is exactly one implementation to keep spec-pinned
-    * (XxHashTieSpec). */
-  private[streaming] def htmlTie(html: Array[Byte]): Long =
-    htmlspark.pipeline.ParseJob.tieOf(html)
-
   /** LATEST-WINS streaming dedup — the genuine re-crawl reconciliation
     * dedupStream deliberately does not do, via custom keyed state
     * (`flatMapGroupsWithState`, the KeyValueGroupedDataset state surface):
     * per url, buffer the best (warc_ts desc, xxhash64(html) desc) crawl
+    * (the tie is ParseJob.tieOf, the batch pipeline's own tiebreak)
     * and EMIT it only when the event-time watermark passes the newest
     * arrival — within the lateness window the emitted row is exactly what
     * batch dedupLatest would pick. A crawl arriving after its url's state
@@ -81,7 +73,7 @@ object StreamingParse {
             var best = state.getOption.orNull
             rows.foreach { p =>
               val ts = p.warc_ts.getTime
-              val cand = PendingLatest(p, htmlTie(p.html), ts)
+              val cand = PendingLatest(p, ParseJob.tieOf(p.html), ts)
               best =
                 if (best == null) cand
                 else {

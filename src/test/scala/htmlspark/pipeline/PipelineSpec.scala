@@ -96,32 +96,48 @@ class PipelineSpec extends AnyFunSuite {
     assert(r(0).getTime == orig + 86400000L)
   }
 
-  test("all three run strategies pick the SAME survivor under " +
+  test("run and dedupLatest keep the in-JVM reference survivor under " +
        "(url, warc_ts) ties with different html") {
     import spark.implicits._
     // 40 urls, each with THREE crawls at an identical timestamp but
     // different html (different content index) — only the xxhash64(html)
-    // tie-break decides the survivor, on every strategy.
+    // tie-break decides the survivor.
     val ts = new java.sql.Timestamp(1704067200000L)
-    val tied = spark.createDataset((0L until 40L).flatMap { u =>
+    val crawls = (0L until 40L).flatMap { u =>
       Seq(0x1000, 0x2000, 0x3000).map { off =>
         Page(s"https://tied.example/$u", ts, PagesGen.renderHtml(u + off), "", "en")
       }
-    })
-    def survivors(strategy: String): Map[String, (String, Int)] =
-      ParseJob.run(tied, strategy)
-        .select($"url",
-          org.apache.spark.sql.functions.md5($"text_extracted".cast("binary")),
-          $"n_bytes")
-        .as[(String, String, Int)].collect()
-        .map(r => r._1 -> ((r._2, r._3))).toMap
-    val parseFirst = survivors("parse-first")
-    val rescan = survivors("rescan")
-    val shuffle = survivors("shuffle")
-    assert(parseFirst.size == 40)
-    assert(parseFirst == rescan,
-      s"parse-first vs rescan differ on ${(parseFirst.toSet diff rescan.toSet).take(3)}")
-    assert(parseFirst == shuffle)
+    }
+    // reference pick, outside Spark: max of (warc_ts, tieOf(html)) per url
+    val reference = crawls.groupBy(_.url).map { case (url, ps) =>
+      url -> ps.maxBy(p => (p.warc_ts.getTime, ParseJob.tieOf(p.html)))
+    }
+    // the three crawls of a url differ in extracted text, so a wrong pick
+    // shows up in run's rows
+    crawls.groupBy(_.url).values.foreach { ps =>
+      val texts = ps.map(ParseJob.parsePage(_).text_extracted)
+      assert(texts.distinct.size == 3, s"crawls of ${ps.head.url} are not distinguishable")
+    }
+    val tied = spark.createDataset(crawls)
+
+    val run = ParseJob.run(tied)
+      .select($"url", $"text_extracted", $"n_bytes")
+      .as[(String, String, Int)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    val expectedRun = reference.map { case (url, p) =>
+      val d = ParseJob.parsePage(p)
+      url -> ((d.text_extracted, d.n_bytes))
+    }
+    assert(run.size == 40)
+    assert(run == expectedRun,
+      s"run differs on ${(run.toSet diff expectedRun.toSet).map(_._1).take(3)}")
+
+    // kept crawl per url, as its index into `crawls`
+    def picks(ps: Iterable[Page]): Map[String, Int] = ps.map { p =>
+      p.url -> crawls.indexWhere(c =>
+        c.url == p.url && java.util.Arrays.equals(c.html, p.html))
+    }.toMap
+    assert(picks(ParseJob.dedupLatest(tied).collect()) == picks(reference.values))
   }
 
   test("p08 flagship oracle faces agree: parsed plain-article md5/len == " +

@@ -45,4 +45,20 @@ class PlanCacheSpec extends AnyFunSuite {
     assert(!(a eq b), "post-clear getOrBuild rebuilds a fresh entry")
     PlanCache.clear(spark)
   }
+
+  test("nPages recounts events rewritten inside the session") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_npages_")
+    val events = dir.resolve("events.parquet").toString
+    try {
+      spark.range(600).toDF("event_id").write.parquet(events)
+      assert(PagesQueries.nPages(spark, dir.toString) == 600L)
+      spark.range(6000).toDF("event_id").write.mode("overwrite").parquet(events)
+      assert(PagesQueries.nPages(spark, dir.toString) == 6000L,
+        "a rewritten events table must not be served the old count")
+      assert(PagesQueries.sampleN(spark, dir.toString) == 600L)
+    } finally {
+      PlanCache.clear(spark)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+  }
 }

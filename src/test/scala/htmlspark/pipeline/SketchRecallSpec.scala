@@ -261,20 +261,6 @@ class SketchRecallSpec extends AnyFunSuite {
     TextOps.clearPlanCache(spark)
   }
 
-  test("slim LSH index scores identically to the fat index (q19 A/B seam)") {
-    import spark.implicits._
-    // same kernel, same probe semantics — only the payload path differs
-    // (key-only index + vec fetch vs embedded payload); any divergence is
-    // a broken dedup-before-fetch or a dropped candidate
-    val fat = AnnOps.annLsh(spark, dir)
-      .as[(Long, Long, Int)].collect().sorted.toSeq
-    val slim = AnnOps.annLsh(spark, dir, slimIndex = true)
-      .as[(Long, Long, Int)].collect().sorted.toSeq
-    assert(fat == slim)
-    assert(fat.nonEmpty)
-    TextOps.clearPlanCache(spark)
-  }
-
   test("seeded sample keeps cells balanced when id order correlates with " +
        "content (lowest-id sample starves 6 of 8 clusters)") {
     // 3000 vectors, sample cap 2048: the 2048 LOWEST ids live in just 2 of

@@ -119,8 +119,8 @@ class StreamingParseSpec extends AnyFunSuite {
       val sparkHash = spark.createDataset(Seq(a0))
         .select(org.apache.spark.sql.functions.xxhash64($"html"))
         .as[Long].collect()(0)
-      assert(StreamingParse.htmlTie(a0.html) == sparkHash,
-        "htmlTie must mirror Spark's xxhash64")
+      assert(ParseJob.tieOf(a0.html) == sparkHash,
+        "the streaming tie (ParseJob.tieOf) must mirror Spark's xxhash64")
     } finally q.stop()
   }
 
