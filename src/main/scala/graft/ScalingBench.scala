@@ -35,8 +35,8 @@ object ScalingBench {
     ParseJob.run(PagesGen.pages(spark, 2000, cores)).count()
 
     // Materialize the corpus once (untimed): the north-rule input is an
-    // Iceberg/parquet table, so the timed job must SCAN, not re-render —
-    // the dedup/salt plan legitimately reads the source more than once.
+    // Iceberg/parquet table, so the timed job must SCAN, not re-render
+    // (ParseJob.run reads the source once; parse-only mode does too).
     import spark.implicits._
     val corpusDir = sys.env.getOrElse("SPARK_LOCAL_DIRS", "/dev/shm/graft-spark") +
       s"/pages_corpus_v${PagesGen.GeneratorVersion}_$n"

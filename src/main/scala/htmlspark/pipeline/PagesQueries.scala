@@ -39,7 +39,7 @@ object PagesQueries {
 
   /** One parsed sample corpus per (session, sample size), persisted and
     * shared by every p-face (p01/p02/p04/p08–p11): without this each face
-    * re-runs the full dedup→salt→parse pipeline — the same N× redundancy
+    * re-runs the full pipeline (`ParseJob.run`) — the same N× redundancy
     * the LSH plan cache removes for the sketch subplans. Keyed on the size
     * alone because PagesGen.pages(spark, n) is fully determined by n. p05
     * (the throughput workhorse) deliberately stays un-cached and
@@ -52,7 +52,8 @@ object PagesQueries {
     }
   }
 
-  /** Flagship: full extraction pipeline (dedup → salt → parse). No embedded
+  /** Flagship: full extraction pipeline (`ParseJob.run`: parse → latest
+    * crawl per url → parse of the oversized survivors). No embedded
     * global sort — determinism ordering is applied by the Verify wrapper;
     * pipeline consumers at scale take the rows unordered. */
   def extractPipeline(spark: SparkSession, dir: String, cap: Long = 5000): DataFrame =
@@ -264,7 +265,7 @@ object PagesQueries {
     f.delete()
   }
 
-  /** Per-partition lineage metrics of the salted parse (north rule). */
+  /** Per-partition lineage metrics of the parsed sample (north rule). */
   def partitionLineage(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val docs = parsedSample(spark, dir).as[ExtractedDoc]

@@ -52,8 +52,21 @@ final case class PartitionMetrics(
     min_url: String,
     max_url: String)
 
-/** The extraction pipeline: pages → skew-salted repartition → per-row
-  * parse via typed Dataset map → latest crawl per url → extracted docs (+
+/** A page after the scan stage of `ParseJob.run`: parsed in place
+  * (`doc`), or, when larger than the oversized-page threshold, still raw
+  * (`html`) for the reduce stage to parse. `tie` is `ParseJob.tieOf(html)`,
+  * the latest-crawl tiebreak. Exactly one of `doc` and `html` is set. */
+private[pipeline] final case class StagedPage(
+    url: String,
+    warc_ts: Timestamp,
+    lang: String,
+    tie: Long,
+    doc: ExtractedDoc,
+    html: Array[Byte])
+
+/** The extraction pipeline: pages → per-row parse via typed Dataset map in
+  * the scan's own stage (oversized pages deferred) → latest crawl per url,
+  * the one exchange → parse of the oversized survivors → extracted docs (+
   * per-partition metrics). The parse is a pure Array[Byte] ⇒ ExtractedDoc
   * function; everything around it stays declarative so Catalyst owns scan
   * pruning and the dedup window plan.
@@ -210,7 +223,8 @@ object ParseJob {
     singletons.union(dedupedDups)
   }
 
-  /** Pages above this many bytes take the salted exchange. */
+  /** Pages above this many bytes are parsed after the dedup exchange
+    * rather than in the scan's stage. */
   private val SaltThreshold = 65536
 
   /** Salt count: scale-adaptive (r6, guide §2.5) — 2× the session's
@@ -228,6 +242,13 @@ object ParseJob {
     * AQE cannot see (it balances shuffle bytes, and a 2 MB doc costs ~1000×
     * a 2 KB doc in the SAME byte-balanced partition). Route rows by
     * (size_bucket, salt) so pathological docs spread across tasks.
+    *
+    * `run` no longer calls this: its dedup exchange, hash-partitioned on
+    * url, spreads the oversized pages just as this url-hash salt did, so
+    * a separate salt exchange only added a second scan and a stage
+    * barrier. It stays as a step of its own for the benchmark's traced
+    * `ParseJob.saltBySize` group. Pages with null html fail both filters
+    * and are dropped.
     */
   def saltBySize(pages: Dataset[Page]): Dataset[Page] = {
     import pages.sparkSession.implicits._
@@ -276,57 +297,85 @@ object ParseJob {
       html, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET,
       html.length, 42L)
 
-  /** salt → parse, each row carrying its tiebreak: (doc, tie). */
-  private def parsedWithTie(pages: Dataset[Page]): DataFrame = {
+  /** The scan stage shared by `run` and `runStats`: every page of at most
+    * SaltThreshold bytes (null html included, parsed as an empty page) is
+    * parsed where the scan put it; an oversized page keeps its raw html.
+    * Each row carries its tiebreak. */
+  private def staged(pages: Dataset[Page]): Dataset[StagedPage] = {
     import pages.sparkSession.implicits._
-    saltBySize(pages).mapPartitions { it =>
+    pages.mapPartitions { it =>
       val engine = new HtmlParser.Engine
-      it.map(p => (parsePage(p, engine), tieOf(p.html)))
-    }.toDF("doc", "tie")
+      it.map { p =>
+        if (p.html != null && p.html.length > SaltThreshold)
+          StagedPage(p.url, p.warc_ts, p.lang, tieOf(p.html), null, p.html)
+        else
+          StagedPage(p.url, p.warc_ts, p.lang, tieOf(p.html),
+            parsePage(p, engine), null)
+      }
+    }
   }
 
-  /** Full pipeline: salt → parse → latest crawl per url.
+  /** Full pipeline: parse in the scan's stage → latest crawl per url →
+    * parse the oversized survivors.
     *
-    * The parse runs BEFORE the dedup shuffle. The html payload (~2.5
-    * KB/doc) never shuffles for ordinary docs: the scan→parse stages fuse
-    * into one narrow pipeline (selective salting still spreads oversized
-    * docs first), and latest-crawl dedup runs on the *extracted* rows
-    * (~0.5 KB) — a 5-6× smaller shuffle. Parsing the ~1% stale duplicate
-    * crawls costs ~1% extra CPU, far cheaper than shuffling 100% of raw
-    * bytes. Output is identical to dedup-then-parse: the parse is pure, so
-    * picking the latest row before or after parsing commutes. The dedup
-    * is a rank-1 window, not max_by over the full row: max_by's struct
-    * buffer triples the exchange here (PLANS.md, removed strategies). */
+    * One scan and one exchange. Ordinary pages are parsed before the dedup
+    * exchange, so their html payload (~2.5 KB/doc) never shuffles: the
+    * exchange carries *extracted* rows (~0.5 KB) — a 5-6× smaller
+    * shuffle. Parsing the ~1% stale duplicate crawls costs ~1% extra CPU,
+    * far cheaper than shuffling 100% of raw bytes. Oversized pages (CPU
+    * skew) ride the same exchange as raw html and are parsed after it:
+    * the exchange's hash partitioning on url spreads them across tasks,
+    * and a stale oversized crawl is never parsed. Output is identical to
+    * dedup-then-parse: the parse is pure, so picking the latest row before
+    * or after parsing commutes. The dedup is a rank-1 window, not max_by
+    * over the full row: max_by's struct buffer triples the exchange here
+    * (PLANS.md, removed strategies). */
   def run(pages: Dataset[Page]): Dataset[ExtractedDoc] = {
     import pages.sparkSession.implicits._
     import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy($"doc.url")
-      .orderBy($"doc.warc_ts".desc, $"tie".desc)
-    parsedWithTie(pages).withColumn("rn", row_number().over(w))
+    val w = Window.partitionBy($"url").orderBy($"warc_ts".desc, $"tie".desc)
+    staged(pages).withColumn("rn", row_number().over(w))
       .filter($"rn" === 1)
+      .select(coalesce($"doc",
+        parseOversized($"url", $"warc_ts", $"lang", $"html")).as("doc"))
       .select($"doc.*").as[ExtractedDoc]
   }
+
+  /** The reduce-stage parse of an oversized page. A column rather than a
+    * typed map, so the rows parsed in the scan stage pass through without
+    * a deserialize → serialize round trip: `coalesce(doc, parseOversized(…))`
+    * evaluates it only where `doc` is null. Each call gets a fresh engine;
+    * an oversized parse dwarfs the engine's set-up. */
+  private val parseOversized =
+    udf((url: String, ts: Timestamp, lang: String, html: Array[Byte]) =>
+      parsePage(Page(url, ts, html, "", lang)))
 
   /** Per-survivor (n_bytes, parse_ok) of `run` — the throughput face.
     * The dedup decision needs just (url, warc_ts, tie) and the payload
     * just those two stats, so the select before the aggregate lets
-    * serializer pruning drop every other doc field: the post-parse
-    * exchange carries ~40 B/row instead of the full extracted row. The
-    * survivor per url is the (warc_ts, tie)-lexicographic-max row —
-    * exactly the row run's rank-1 window picks — so the stats are
-    * identical; max_by additionally enables map-side partial aggregation
-    * (a partial SortAggregate before the exchange: one candidate per (map
-    * partition, url)). */
+    * serializer pruning drop every other doc field: the exchange carries
+    * ~40 B/row instead of the full extracted row, plus the raw html of
+    * oversized pages, which are parsed after it as in `run`. The survivor
+    * per url is the (warc_ts, tie)-lexicographic-max row — exactly the
+    * row run's rank-1 window picks — so the stats are identical; max_by
+    * additionally enables map-side partial aggregation (a partial
+    * SortAggregate before the exchange: one candidate per (map partition,
+    * url)). */
   def runStats(pages: Dataset[Page]): DataFrame = {
     import pages.sparkSession.implicits._
-    parsedWithTie(pages)
-      .select($"doc.url".as("url"), $"doc.warc_ts".as("warc_ts"), $"tie",
+    staged(pages)
+      .select($"url", $"warc_ts", $"tie", $"html",
         $"doc.n_bytes".as("n_bytes"), $"doc.parse_ok".as("parse_ok"))
       .groupBy("url")
-      .agg(max_by(struct($"n_bytes", $"parse_ok"),
+      .agg(max_by(struct($"n_bytes", $"parse_ok", $"html"),
         struct($"warc_ts", $"tie")).as("s"))
-      .select($"url", $"s.n_bytes".as("n_bytes"),
-        $"s.parse_ok".as("parse_ok"))
+      // the stats depend on the html alone, so the parse needs no ts/lang
+      .select($"url", $"s.n_bytes".as("n_bytes"), $"s.parse_ok".as("parse_ok"),
+        when($"s.html".isNotNull, parseOversized($"url",
+          lit(null).cast("timestamp"), lit(null).cast("string"),
+          $"s.html")).as("big"))
+      .select($"url", coalesce($"n_bytes", $"big.n_bytes").as("n_bytes"),
+        coalesce($"parse_ok", $"big.parse_ok").as("parse_ok"))
   }
 
   /** Per-partition lineage/metrics over an extracted Dataset (second,

@@ -140,6 +140,95 @@ class PipelineSpec extends AnyFunSuite {
     assert(picks(ParseJob.dedupLatest(tied).collect()) == picks(reference.values))
   }
 
+  test("a page with null html survives run and runStats as an empty page") {
+    import spark.implicits._
+    val nullUrl = "https://null.example/empty.html"
+    val pages = Seq(
+      Page(nullUrl, new java.sql.Timestamp(0L), null, "", "en"),
+      PagesGen.page(1)).toDS()
+    val run = ParseJob.run(pages).collect()
+    assert(run.length == 2)
+    val d = run.find(_.url == nullUrl).getOrElse(fail(s"run dropped $nullUrl"))
+    assert(d.parse_ok && d.n_bytes == 0 && d.text_extracted == "")
+    val stats = ParseJob.runStats(pages)
+      .select($"url", $"n_bytes", $"parse_ok").as[(String, Int, Boolean)]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(stats.size == 2)
+    assert(stats.get(nullUrl) == Some((0, true)))
+  }
+
+  test("re-crawls on both sides of the oversized-page threshold keep the " +
+       "in-JVM reference survivor in run and runStats") {
+    import spark.implicits._
+    val in = getClass.getResourceAsStream("/realdoc/test.html")
+    val big = try in.readAllBytes() finally in.close()
+    assert(big.length > 65536, "must exceed the oversized-page threshold")
+    val t0 = new java.sql.Timestamp(1704067200000L)
+    val t1 = new java.sql.Timestamp(t0.getTime + 86400000L)
+    def page(url: String, ts: java.sql.Timestamp, html: Array[Byte]) =
+      Page(url, ts, html, "", "en")
+    val crawls =
+      Seq(page("https://straddle.example/big-newer", t1, big),
+        page("https://straddle.example/big-newer", t0, PagesGen.renderHtml(7)),
+        page("https://straddle.example/small-newer", t1, PagesGen.renderHtml(8)),
+        page("https://straddle.example/small-newer", t0, big)) ++
+      (0L until 8L).flatMap { k =>
+        val url = s"https://straddle.example/tied-$k"
+        Seq(page(url, t0, big), page(url, t0, PagesGen.renderHtml(100 + k)))
+      }
+    // reference pick, outside Spark: max of (warc_ts, tieOf(html)) per url
+    val reference = crawls.groupBy(_.url).map { case (url, ps) =>
+      url -> ps.maxBy(p => (p.warc_ts.getTime, ParseJob.tieOf(p.html)))
+    }
+    def isBig(p: Page) = p.html.length > 65536
+    assert(isBig(reference("https://straddle.example/big-newer")))
+    assert(!isBig(reference("https://straddle.example/small-newer")))
+    val tiedPicks = reference.filter(_._1.contains("tied-")).values.map(isBig)
+    assert(tiedPicks.toSet == Set(true, false),
+      "the tie must pick the oversized crawl for some urls and the small one for others")
+    val expected = reference.map { case (url, p) => url -> ParseJob.parsePage(p) }
+    val ds = spark.createDataset(crawls)
+
+    val run = ParseJob.run(ds)
+      .select($"url", $"text_extracted", $"n_bytes", $"parse_ok")
+      .as[(String, String, Int, Boolean)].collect()
+      .map(r => r._1 -> ((r._2, r._3, r._4))).toMap
+    assert(run == expected.map { case (url, d) =>
+      url -> ((d.text_extracted, d.n_bytes, d.parse_ok)) })
+
+    val stats = ParseJob.runStats(ds)
+      .select($"url", $"n_bytes", $"parse_ok").as[(String, Int, Boolean)]
+      .collect().map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(stats == expected.map { case (url, d) => url -> ((d.n_bytes, d.parse_ok)) })
+  }
+
+  test("run over a parquet pages table plans one scan and one exchange") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val dir = java.nio.file.Files.createTempDirectory("graft_plan_").toString
+    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
+    try {
+      // AQE off so the executed plan is the whole static plan
+      spark.conf.set("spark.sql.adaptive.enabled", "false")
+      PagesGen.pages(spark, 200).write.mode("overwrite").parquet(s"$dir/pages")
+      val pages = spark.read.parquet(s"$dir/pages").as[Page]
+      val plan = ParseJob.run(pages).queryExecution.executedPlan
+      val exchanges = plan.collect { case e: ShuffleExchangeExec => e }
+      val scans = plan.collect { case s: FileSourceScanExec => s }
+      assert(exchanges.size == 1, s"expected one exchange; got plan:\n$plan")
+      assert(scans.size == 1, s"expected one pages scan; got plan:\n$plan")
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
+      deleteTree(new java.io.File(dir))
+    }
+  }
+
+  private def deleteTree(f: java.io.File): Unit = {
+    Option(f.listFiles()).foreach(_.foreach(deleteTree))
+    f.delete()
+  }
+
   test("p08 flagship oracle faces agree: parsed plain-article md5/len == " +
        "template-derived expected (the driver's DuckDB compare shape)") {
     val dir = "/root/testdata/sf0.001"
